@@ -27,9 +27,10 @@ def _batch(args) -> int:
     from dbt_project_spark import get_spark
     from dbt_project_spark.sources.readers import read_csv
     from dbt_project_spark.streaming.pipeline import (
+        analytics_sinks,
         join_metric_streams,
-        micro_batch_analytics,
         split_event_streams,
+        write_analytics,
     )
 
     spark = get_spark(app_name="dbt-project-spark-batch")
@@ -60,9 +61,9 @@ def _batch(args) -> int:
         pv, sd, tp = split_event_streams(ev)
         joined = join_metric_streams(pv, sd, tp)
 
-    for name, df in micro_batch_analytics(joined).items():
-        path = os.path.join(args.out, name)
-        df.write.mode("overwrite").parquet(path)
+    sinks = analytics_sinks(args.out)
+    write_analytics(joined, sinks, "overwrite")
+    for name, path in sinks.items():
         print(f"wrote {name} -> {path}")
     return 0
 

@@ -20,18 +20,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
+from dbt_project_spark.queries_web import _events
 from dbt_project_spark.sources import load_table
 
 _V100 = "CAST(round(value * 100, 0) AS BIGINT)"
 SESSION_GAP_SEC = 1800
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load_table(spark, sf_dir, "events")
-        .withColumn("value100", F.round(F.col("value") * 100, 0).cast("bigint"))
-        .withColumn("epoch", F.unix_timestamp("ts"))
-    )
 
 
 @register(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
+from dbt_project_spark.queries_web import _events
 from dbt_project_spark.sources import load_table
 
 _EP = "CAST(floor(epoch(ts)) AS BIGINT)"
@@ -36,14 +37,6 @@ _V100 = "CAST(round(value * 100, 0) AS BIGINT)"
 # terciles ~5.8k / ~13.9k — thresholds keep all three tiers populated).
 TIER_LOW_MAX = 6_000
 TIER_MID_MAX = 14_000
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load_table(spark, sf_dir, "events")
-        .withColumn("epoch", F.unix_timestamp("ts"))
-        .withColumn("value100", F.round(F.col("value") * 100, 0).cast("bigint"))
-    )
 
 
 @register(

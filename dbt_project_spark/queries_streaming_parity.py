@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from dbt_project_spark.caching import persisted
 from dbt_project_spark.catalog import register
 from dbt_project_spark.sources import load_table
 
@@ -86,13 +87,12 @@ def _parity_summary(
     n_inputs: int,
 ) -> DataFrame:
     # r13: the two exceptAll passes each re-executed the full batch
-    # serving pipeline — persist it for the diff, release before
-    # returning (all uses reduce to scalars here).
-    batch = batch.persist()
-    total = streamed.count()
-    stream_only = streamed.exceptAll(batch).count()
-    batch_only = batch.exceptAll(streamed).count()
-    batch.unpersist()
+    # serving pipeline — cache it for the diff (all uses reduce to
+    # scalars here). A caller's own cache of ``batch`` is left alone.
+    with persisted(batch) as batch:
+        total = streamed.count()
+        stream_only = streamed.exceptAll(batch).count()
+        batch_only = batch.exceptAll(streamed).count()
     matching = total - stream_only
     acc = round(100.0 * matching / total, 2) if total else 0.0
     return spark.createDataFrame(
@@ -292,13 +292,12 @@ def serving_parity_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         final = read_current_distribution(spark, os.path.join(tmp, "out"))
         streamed = spark.createDataFrame(final.collect(), final.schema)
-        # persist: n_inputs below + both exceptAll diffs re-executed
-        # this agg 3× (the _parity_summary persist reuses this cache).
-        batch = windowed_count_distribution(
-            events, "ts", 300, ["event_type"]
-        ).persist()
-        return _parity_summary(
-            spark, "windowed_dist_online", streamed, batch, batch.count()
-        )
+        # cached here, not only inside _parity_summary: n_inputs below
+        # + both exceptAll diffs would re-execute this agg 3×.
+        batch = windowed_count_distribution(events, "ts", 300, ["event_type"])
+        with persisted(batch) as batch:
+            return _parity_summary(
+                spark, "windowed_dist_online", streamed, batch, batch.count()
+            )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
+from dbt_project_spark.queries_web import _events
 from dbt_project_spark.sources import load_table
 
 _V100 = "CAST(round(value * 100, 0) AS BIGINT)"
@@ -25,12 +26,6 @@ _OKEY = (
     " || lpad(CAST(event_id AS VARCHAR), 12, '0')"
 )
 OHLC_BUCKET_S = 900  # 15-minute bars
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events").withColumn(
-        "value100", F.round(F.col("value") * 100, 0).cast("bigint")
-    )
 
 
 @register(

@@ -49,11 +49,16 @@ _V100 = "CAST(round(value * 100, 0) AS BIGINT)"
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    # page_views analogue: integer k from the JSON props payload.
+    """``events`` plus the derived columns the event-query modules share:
+    ``k`` (page_views analogue: integer from the JSON props payload),
+    ``value100`` (value in exact hundredths) and ``epoch`` (unix seconds).
+    A query that reads none of them pays nothing: unused columns are
+    pruned from the plan."""
     return (
-        ev.withColumn("k", F.get_json_object("props", "$.k").cast("int"))
+        load_table(spark, sf_dir, "events")
+        .withColumn("k", F.get_json_object("props", "$.k").cast("int"))
         .withColumn("value100", F.round(F.col("value") * 100, 0).cast("bigint"))
+        .withColumn("epoch", F.unix_timestamp("ts"))
     )
 
 

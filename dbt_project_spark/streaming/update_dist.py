@@ -31,6 +31,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dbt_project_spark.caching import persisted
 from dbt_project_spark.streaming.pipeline import ensure_runtime_confs
 
 
@@ -171,55 +172,50 @@ def _run_update_distribution(
 
     def upsert_batch(batch_df: DataFrame, epoch_id: int) -> None:
         sp = batch_df.sparkSession
-        # r13: persist FIRST and use count() as the emptiness check —
-        # isEmpty() evaluated a partition of the stateful-agg output
-        # outside the cache, so every trigger paid that work twice
-        # (~0.5 s/trigger at sf0.1). One count both fills the cache
-        # and answers emptiness.
-        updates = batch_df.persist()
-        if updates.count() == 0:
-            updates.unpersist()
-            return
-        prev_v = _latest_version(state_dir)
-        if prev_v is None:
-            state = updates
-        else:
-            prev = sp.read.parquet(os.path.join(state_dir, f"v{prev_v}"))
-            kept = prev.join(
-                updates.select("window_start", key_col),
-                on=["window_start", key_col],
-                how="left_anti",
-            )
-            state = kept.unionByName(updates)
-        new_state_path = os.path.join(state_dir, f"v{_next_version(state_dir)}")
-        state.write.mode("overwrite").parquet(new_state_path)
+        # One count both fills the cache and answers emptiness (see
+        # caching.persisted); the upsert reads ``updates`` three times.
+        with persisted(batch_df) as updates:
+            if updates.count() == 0:
+                return
+            prev_v = _latest_version(state_dir)
+            if prev_v is None:
+                state = updates
+            else:
+                prev = sp.read.parquet(os.path.join(state_dir, f"v{prev_v}"))
+                kept = prev.join(
+                    updates.select("window_start", key_col),
+                    on=["window_start", key_col],
+                    how="left_anti",
+                )
+                state = kept.unionByName(updates)
+            new_state_path = os.path.join(state_dir, f"v{_next_version(state_dir)}")
+            state.write.mode("overwrite").parquet(new_state_path)
 
-        # Recompute pct ONLY for windows touched this trigger, over the
-        # window's complete current content.
-        full = sp.read.parquet(new_state_path)
-        touched = updates.select("window_start").distinct()
-        w = Window.partitionBy("window_start")
-        dist = (
-            full.join(touched, on="window_start")
-            .withColumn(
-                "percentage",
-                F.round(
-                    F.lit(100.0) * F.col("count") / F.sum("count").over(w), 2
-                ),
+            # Recompute pct ONLY for windows touched this trigger, over the
+            # window's complete current content.
+            full = sp.read.parquet(new_state_path)
+            touched = updates.select("window_start").distinct()
+            w = Window.partitionBy("window_start")
+            dist = (
+                full.join(touched, on="window_start")
+                .withColumn(
+                    "percentage",
+                    F.round(
+                        F.lit(100.0) * F.col("count") / F.sum("count").over(w), 2
+                    ),
+                )
             )
-        )
-        # Emitted view = unchanged windows from the previous emit +
-        # freshly recomputed touched windows.
-        out_v = _latest_version(out_dir)
-        if out_v is not None:
-            prev_out = sp.read.parquet(os.path.join(out_dir, f"v{out_v}"))
-            dist = prev_out.join(
-                touched, on="window_start", how="left_anti"
-            ).unionByName(dist)
-        dist.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"v{_next_version(out_dir)}")
-        )
-        updates.unpersist()
+            # Emitted view = unchanged windows from the previous emit +
+            # freshly recomputed touched windows.
+            out_v = _latest_version(out_dir)
+            if out_v is not None:
+                prev_out = sp.read.parquet(os.path.join(out_dir, f"v{out_v}"))
+                dist = prev_out.join(
+                    touched, on="window_start", how="left_anti"
+                ).unionByName(dist)
+            dist.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"v{_next_version(out_dir)}")
+            )
         _prune_versions(state_dir)
         _prune_versions(out_dir)
 

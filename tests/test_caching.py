@@ -143,3 +143,24 @@ def test_session_factory_caps_plan_string_length(spark):
     the r08 full suite. A production driver wants the same cap, so it
     lives in session.py's factory, not the test harness."""
     assert int(spark.conf.get("spark.sql.maxPlanStringLength")) == 65536
+
+
+def test_persisted_releases_only_what_it_persisted(spark):
+    from pyspark import StorageLevel
+
+    from dbt_project_spark.caching import persisted
+
+    df = spark.range(10)
+    with pytest.raises(RuntimeError):
+        with persisted(df) as cached:
+            assert cached.storageLevel != StorageLevel.NONE
+            raise RuntimeError("sink failed")
+    assert df.storageLevel == StorageLevel.NONE  # released on the error path
+
+    # Cached by its owner through another DataFrame over the same plan:
+    # read through, left cached.
+    owner = spark.range(10).cache()
+    with persisted(spark.range(10)):
+        pass
+    assert owner.storageLevel != StorageLevel.NONE
+    owner.unpersist()

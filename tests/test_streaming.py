@@ -3,8 +3,12 @@ batch comparison, comparision.sql) automated: run the availableNow
 file-stream pipeline over sf0.001 events and assert the streaming
 sinks equal the batch-computed analytics."""
 
+import json
+import threading
+
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from dbt_project_spark.sources import load_table
 from dbt_project_spark.streaming import (
@@ -31,13 +35,48 @@ def test_join_metric_streams_batch_semantics(spark, events):
     assert row["engagement_score"] == pytest.approx(expected)
 
 
+class _Progress(StreamingQueryListener):
+    """Collects every progress report; events arrive asynchronously."""
+
+    def __init__(self) -> None:
+        self.reports: list[dict] = []
+        self.terminated = threading.Event()
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        self.reports.append(json.loads(event.progress.json))
+
+    def onQueryTerminated(self, event) -> None:
+        self.terminated.set()
+
+
 def test_file_stream_pipeline_matches_batch(spark, events, tmp_path):
     src = str(tmp_path / "src")
     events.write.parquet(src)
 
-    sinks = run_file_stream_pipeline(
-        spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
+    listener = _Progress()
+    spark.streams.addListener(listener)
+    try:
+        sinks = run_file_stream_pipeline(
+            spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt")
+        )
+        assert listener.terminated.wait(30), "no termination event"
+    finally:
+        spark.streams.removeListener(listener)
+
+    # The joined batch is evaluated once per trigger: one evaluation of
+    # a stream-stream join opens 4 state stores (2 per side) in each
+    # shuffle partition. A sink re-running the join adds another 4 × n.
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    joins = [
+        (p["batchId"], op["numStateStoreInstances"])
+        for p in listener.reports
+        for op in p["stateOperators"]
+        if op["operatorName"] == "symmetricHashJoin"
+    ]
+    assert joins and all(k == 4 * n for _, k in joins), joins
 
     # batch-side ground truth through the same operators
     pv, sd, tp = split_event_streams(events)
